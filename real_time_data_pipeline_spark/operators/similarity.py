@@ -102,10 +102,11 @@ def cosine_topk_gemm(
     """Exact top-k via blocked matrix multiply — the vectorized scale
     path.  The probe set is collected driver-side (it is a bounded query
     batch — the one place a collect is correct by design) and closed over;
-    each corpus partition streams through ``mapInPandas`` doing one numpy
-    GEMM per Arrow batch and emitting only its local top-k per query, so
-    the shuffle to the final ranking carries ≤ k·|queries| rows per
-    partition regardless of corpus size.
+    each corpus partition streams through ``mapInArrow`` doing one numpy
+    batch×queries product per Arrow batch and emitting only its local
+    top-k per query (plus rows tied with the k-th), so the shuffle to the
+    final ranking carries about k·|queries| rows per partition regardless
+    of corpus size.
 
     Numerically: numpy pairwise summation ≠ the sequential fold of
     :func:`cosine_topk`, so raw GEMM scores can differ in the last ulp —
@@ -121,6 +122,7 @@ def cosine_topk_gemm(
     unit test pins neighbor-set equality vs the exact path).
     """
     import numpy as np
+    from pyspark.sql.pandas.types import to_arrow_type
 
     qrows = queries.select(query_id_col, query_vec_col).collect()
     # zero-norm queries have no defined cosine to anything — excluded,
@@ -134,13 +136,16 @@ def cosine_topk_gemm(
 
     # Output id types follow the input schemas — hardcoding `long` would
     # silently break string/int32 ids.
-    qid_t = queries.schema[query_id_col].dataType.simpleString()
+    qid_type = queries.schema[query_id_col].dataType
+    qid_t = qid_type.simpleString()
     cid_t = corpus.schema[id_col].dataType.simpleString()
     out_schema = f"{query_id_col} {qid_t}, neighbor_id {cid_t}, cos double"
+    # mapInArrow does not cast: every emitted column must carry the
+    # declared Arrow type, so query ids get theirs explicitly and
+    # neighbor ids are taken from the input id column itself.
+    qid_arrow = to_arrow_type(qid_type)
 
-    # r11: mapInArrow + flat-buffer reshape (guide §4.2) — same
-    # argpartition over the same float64 GEMM scores, bit-identical
-    # candidate rows.
+    # r11: mapInArrow + flat-buffer reshape (guide §4.2).
     def score(batches):
         import pyarrow as pa
 
@@ -152,22 +157,30 @@ def cosine_topk_gemm(
             if rb.num_rows == 0:
                 continue
             C = list_matrix(rb.column(1))
-            ids = rb.column(0).to_numpy(zero_copy_only=False)
+            id_arr = rb.column(0)
             norms = np.linalg.norm(C, axis=1, keepdims=True)
             # zero-norm corpus vectors excluded, matching cosine_topk
             # (their NaN score would otherwise silently fall out of
             # numpy's selection while crashing the exact path's cast)
             keep = norms[:, 0] > 0
             if not keep.all():
-                C, ids, norms = C[keep], ids[keep], norms[keep]
+                C, norms = C[keep], norms[keep]
+                id_arr = id_arr.filter(pa.array(keep))
+            ids = id_arr.to_numpy(zero_copy_only=False)
             if not len(ids):
                 continue
             Cn = C / norms
-            S = Cn @ Qn.T  # (batch, n_queries)
+            # (batch, n_queries).  einsum, not BLAS: a blocked GEMM rounds
+            # a row differently by its position in the batch, so equal
+            # vectors could score an ulp apart and lose the id tie-break.
+            S = np.einsum("id,qd->iq", Cn, Qn)
             take = min(sel + 1, len(ids))  # +1 in case self is in the batch
             out_q, out_rows, out_c = [], [], []
             for j, qid in enumerate(qids):
-                idx = np.argpartition(-S[:, j], take - 1)[:take]
+                # every row tied with the take-th best stays a candidate;
+                # the rank window below breaks the ties by id
+                kth = np.partition(-S[:, j], take - 1)[take - 1]
+                idx = np.flatnonzero(-S[:, j] <= kth)
                 m = ids[idx] != qid
                 idx = idx[m]
                 out_q.extend([qid] * len(idx))
@@ -178,8 +191,8 @@ def cosine_topk_gemm(
                 continue
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(out_q),
-                    pa.array(ids[allidx]),
+                    pa.array(out_q, type=qid_arrow),
+                    id_arr.take(pa.array(allidx)),
                     pa.array(np.concatenate(out_c), type=pa.float64()),
                 ],
                 [query_id_col, "neighbor_id", "cos"],
@@ -1099,69 +1112,72 @@ def pq_fit(
     # before returning (its result is numpy codebooks, not a lazy frame),
     # so the persist is released here instead of tracked for the caller —
     # a long-lived session no longer accumulates one leaked cache per fit.
-    vecs = corpus.select(vec_col).persist()
+    # The release sits in a ``finally`` so a failed iteration frees it too.
     from real_time_data_pipeline_spark.operators.arrowvec import (
         list_array,
         list_matrix,
     )
 
-    for _ in range(iters):
-        B = books  # rebind for closure capture per round
+    vecs = corpus.select(vec_col).persist()
+    try:
+        for _ in range(iters):
+            B = books  # rebind for closure capture per round
 
-        # r11: mapInArrow + flat-buffer reshape (guide §4.2) — one
-        # buffer view per batch instead of one numpy object per row;
-        # identical float64 values, identical partial sums.
-        def partials(batches):
-            import pyarrow as pa
+            # r11: mapInArrow + flat-buffer reshape (guide §4.2) — one
+            # buffer view per batch instead of one numpy object per row;
+            # identical float64 values, identical partial sums.
+            def partials(batches):
+                import pyarrow as pa
 
-            sums = np.zeros((m, k, dsub))
-            counts = np.zeros((m, k), dtype=np.int64)
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                V = list_matrix(rb.column(0))
-                if normalize:
-                    V = V / np.linalg.norm(V, axis=1, keepdims=True)
-                for j in range(m):
-                    S = V[:, j * dsub : (j + 1) * dsub]
-                    # (batch, k) squared L2 to codebook j
-                    d2 = ((S[:, None, :] - B[j][None, :, :]) ** 2).sum(-1)
-                    cell = d2.argmin(1)
-                    np.add.at(sums[j], cell, S)
-                    np.add.at(counts[j], cell, 1)
-            nz_j, nz_c = np.nonzero(counts)
-            if len(nz_j):
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(nz_j.astype(np.int32)),
-                        pa.array(nz_c.astype(np.int32)),
-                        pa.array(counts[nz_j, nz_c].astype(np.int64)),
-                        list_array(sums[nz_j, nz_c], pa.float64()),
-                    ],
-                    ["sub", "cell", "n", "s"],
+                sums = np.zeros((m, k, dsub))
+                counts = np.zeros((m, k), dtype=np.int64)
+                for rb in batches:
+                    if rb.num_rows == 0:
+                        continue
+                    V = list_matrix(rb.column(0))
+                    if normalize:
+                        V = V / np.linalg.norm(V, axis=1, keepdims=True)
+                    for j in range(m):
+                        S = V[:, j * dsub : (j + 1) * dsub]
+                        # (batch, k) squared L2 to codebook j
+                        d2 = ((S[:, None, :] - B[j][None, :, :]) ** 2).sum(-1)
+                        cell = d2.argmin(1)
+                        np.add.at(sums[j], cell, S)
+                        np.add.at(counts[j], cell, 1)
+                nz_j, nz_c = np.nonzero(counts)
+                if len(nz_j):
+                    yield pa.RecordBatch.from_arrays(
+                        [
+                            pa.array(nz_j.astype(np.int32)),
+                            pa.array(nz_c.astype(np.int32)),
+                            pa.array(counts[nz_j, nz_c].astype(np.int64)),
+                            list_array(sums[nz_j, nz_c], pa.float64()),
+                        ],
+                        ["sub", "cell", "n", "s"],
+                    )
+
+            rows = (
+                vecs.mapInArrow(
+                    partials, "sub int, cell int, n long, s array<double>"
                 )
-
-        rows = (
-            vecs.mapInArrow(
-                partials, "sub int, cell int, n long, s array<double>"
-            )
-            .groupBy("sub", "cell")
-            .agg(
-                F.sum("n").alias("n"),
-                F.array(
-                    *[F.sum(F.col("s")[i]) for i in range(dsub)]
-                ).alias("s"),
-            )
-            .collect()
-        )
-        new = books.copy()
-        for r in rows:
-            if r["n"] > 0:
-                new[r["sub"], r["cell"]] = (
-                    np.array(r["s"]) / r["n"]
+                .groupBy("sub", "cell")
+                .agg(
+                    F.sum("n").alias("n"),
+                    F.array(
+                        *[F.sum(F.col("s")[i]) for i in range(dsub)]
+                    ).alias("s"),
                 )
-        books = new
-    vecs.unpersist()
+                .collect()
+            )
+            new = books.copy()
+            for r in rows:
+                if r["n"] > 0:
+                    new[r["sub"], r["cell"]] = (
+                        np.array(r["s"]) / r["n"]
+                    )
+            books = new
+    finally:
+        vecs.unpersist()
     return books
 
 
@@ -1878,21 +1894,29 @@ def kmeans_fixedpoint(
     every step reproducible on any engine, so a DuckDB oracle can
     recompute the whole fit with the iterations unrolled.
 
-    Scale shape identical to kmeans_fit: per iteration one
-    Arrow-batched numpy assignment pass over the corpus (int64
-    matmul-free distance against the broadcast k×dim integer centroid
-    matrix) + one (cell, dim)-grain partial-aggregated shuffle; k×dim
-    centroid state is driver-resident; empty cells keep their previous
-    centroid.  Overflow: |q| ≤ 1e4 ⇒ per-dim squared diff ≤ 4e8,
-    64-dim distance ≤ 2.6e10; per-(cell,dim) sums ≤ 1e4·n — int64 to
-    ~1e14 rows.
+    Scale shape: each Lloyd iteration is ONE ``mapInArrow`` pass over
+    the quantized corpus, with no join and no shuffle — every Arrow
+    batch parses to an (n, dim) int64 matrix with one flat-buffer view,
+    takes the argmin against the broadcast k×dim int64 centroid matrix
+    (int64 distance, matmul-free) and folds into per-partition int64
+    (k, dim) sums and (k,) counts; each partition emits at most k
+    partial rows, which the driver reduces in exact Python ints before
+    the truncating-division update (bounded: ≤ k rows per partition,
+    the pca_power_top1 shape).  Empty cells keep their previous
+    centroid.  The final assignment is one more Arrow pass that carries
+    the input id column through unchanged, so any id type survives.
+    Overflow: |q| ≤ 1e4 ⇒ per-dim squared diff ≤ 4e8, 64-dim distance
+    ≤ 2.6e10; per-partition (cell, dim) sums ≤ 1e4·n — int64 to ~1e14
+    rows.
 
     Output: (id, cell, dist) under the FINAL centroids."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
+    from real_time_data_pipeline_spark.operators.arrowvec import (
+        list_array,
+        list_matrix,
+    )
     from real_time_data_pipeline_spark.operators.curation import (
         portable_hash48,
     )
@@ -1917,53 +1941,65 @@ def kmeans_fixedpoint(
     def trunc_div(s: int, n: int) -> int:
         return -((-s) // n) if s < 0 else s // n
 
-    def assign_factory(Cm):
-        Cl = Cm.copy()
+    def sq_dists(col, Cm):
+        # (n, k) int64 squared distances; argmin takes the FIRST
+        # minimal index == ORDER BY dist, cell
+        V = list_matrix(col, np.int64)
+        return V, ((V[:, None, :] - Cm[None, :, :]) ** 2).sum(axis=2)
 
-        def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.array(
-                    [np.asarray(v, dtype=np.int64) for v in pdf["qv"]]
-                )
-                # (n, k) int64 squared distances; argmin takes the
-                # FIRST minimal index == ORDER BY dist, cell
-                d = ((V[:, None, :] - Cl[None, :, :]) ** 2).sum(axis=2)
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col],
-                        "cell": d.argmin(axis=1).astype("int64"),
-                        "dist": d.min(axis=1).astype("int64"),
-                    }
-                )
+    # Both UDFs read C, which is pickled with them when mapInArrow is
+    # called: each iteration's pass sees that iteration's centroids.
+    def partials(batches):
+        sums = np.zeros(C.shape, dtype=np.int64)
+        counts = np.zeros(len(C), dtype=np.int64)
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            V, d = sq_dists(rb.column(0), C)
+            cell = d.argmin(axis=1)
+            np.add.at(sums, cell, V)
+            np.add.at(counts, cell, 1)
+        nz = np.flatnonzero(counts)
+        if len(nz):
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(nz.astype(np.int32)),
+                    pa.array(counts[nz]),
+                    list_array(sums[nz], pa.int64()),
+                ],
+                ["cell", "n", "s"],
+            )
 
-        return assign
+    for _ in range(iters):
+        parts = (
+            quant.select("qv")
+            .mapInArrow(partials, "cell int, n long, s array<bigint>")
+            .collect()  # ≤ k rows per partition — bounded by design
+        )
+        tot: dict = {}
+        for r in parts:
+            n, s = tot.get(r["cell"], (0, 0))
+            tot[r["cell"]] = (n + r["n"], s + np.array(r["s"], dtype=object))
+        for cell, (n, s) in tot.items():
+            C[cell] = [trunc_div(x, n) for x in s]
+
+    def assign(batches):
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            _, d = sq_dists(rb.column(1), C)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column(0),
+                    pa.array(d.argmin(axis=1), type=pa.int64()),
+                    pa.array(d.min(axis=1), type=pa.int64()),
+                ],
+                [id_col, "cell", "dist"],
+            )
 
     id_t = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_t}, cell bigint, dist bigint"
-    for _ in range(iters):
-        assigned = quant.mapInPandas(assign_factory(C), out_schema)
-        stats = (
-            assigned.join(quant, id_col)
-            .select("cell", F.posexplode("qv").alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg(
-                F.sum("x").cast("bigint").alias("s"),
-                F.count("*").cast("bigint").alias("n"),
-            )
-            .collect()  # k x dim rows — bounded by design
-        )
-        new = C.copy()
-        per_cell: dict = {}
-        for r in stats:
-            per_cell.setdefault(r["cell"], []).append(r)
-        for cell, rows in per_cell.items():
-            for r in rows:
-                new[cell, r["pos"]] = trunc_div(int(r["s"]), int(r["n"]))
-        C = new
-    return quant.mapInPandas(assign_factory(C), out_schema).select(
-        id_col, "cell", "dist"
+    return quant.mapInArrow(
+        assign, f"{id_col} {id_t}, cell bigint, dist bigint"
     )
 
 
@@ -2001,14 +2037,18 @@ def pca_power_top1(
     corpus scales where n²·quant_scale² nears int64, widen the scatter
     aggregate to DECIMAL(38,0) — the quantized sums stay exact.
 
-    Scale shape: ONE mapInPandas pass emits per-partition int64 Gram
-    partials (dim² + dim + 1 integers — numpy int64 matmul is exact);
-    the dim×dim iteration is driver-resident; the projection is one
-    JVM fold per row against the broadcast literal component."""
-    from collections.abc import Iterator
-
+    Scale shape: ONE mapInArrow pass emits per-partition int64 Gram
+    partials (dim² + dim + 1 integers — numpy int64 matmul is exact;
+    each Arrow batch parses with one flat-buffer view); the dim×dim
+    iteration is driver-resident; the projection is one JVM fold per
+    row against the broadcast literal component."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from real_time_data_pipeline_spark.operators.arrowvec import (
+        list_array,
+        list_matrix,
+    )
 
     quant = corpus.select(
         F.col(id_col),
@@ -2021,29 +2061,32 @@ def pca_power_top1(
     )
     dim = len(corpus.select(vec_col).first()[0])
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partials(batches):
         n_tot = 0
         s_tot = np.zeros(dim, dtype=np.int64)
         g_tot = np.zeros((dim, dim), dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            Q = np.array([np.asarray(v, dtype=np.int64) for v in pdf["qv"]])
+            Q = list_matrix(rb.column(0), np.int64)
             n_tot += len(Q)
             s_tot += Q.sum(axis=0)
             g_tot += Q.T @ Q
         if n_tot:
-            yield pd.DataFrame(
-                {
-                    "n": [n_tot],
-                    "s": [s_tot.tolist()],
-                    "g": [g_tot.flatten().tolist()],
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([n_tot], type=pa.int64()),
+                    list_array(s_tot[None, :], pa.int64()),
+                    list_array(g_tot.reshape(1, -1), pa.int64()),
+                ],
+                ["n", "s", "g"],
             )
 
-    parts = quant.mapInPandas(
-        partials, "n bigint, s array<bigint>, g array<bigint>"
-    ).collect()  # one row per partition — bounded
+    parts = (
+        quant.select("qv")
+        .mapInArrow(partials, "n bigint, s array<bigint>, g array<bigint>")
+        .collect()  # one row per partition — bounded
+    )
     n = sum(int(p["n"]) for p in parts)
     s = [sum(int(p["s"][d]) for p in parts) for d in range(dim)]
     g = [

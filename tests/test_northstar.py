@@ -456,6 +456,35 @@ def test_similarity_schemas_follow_input_types(spark):
     assert gemm_sets == exact_sets
 
 
+@pytest.mark.parametrize(
+    "id_type, make_id", [("int", int), ("string", lambda i: f"d{i:02d}")]
+)
+def test_cosine_topk_gemm_ids_keep_input_type(spark, id_type, make_id):
+    """The gemm pass emits query and neighbor ids with their input Arrow
+    types (mapInArrow does not cast), also when zero-norm corpus rows
+    are dropped from a batch; with the exact re-rank the rows equal the
+    brute-force path's."""
+    from real_time_data_pipeline_spark.operators import similarity
+
+    rows = [
+        (make_id(i), [float((i * 7 + j * 3) % 11) - 5.0 for j in range(8)])
+        for i in range(40)
+    ] + [(make_id(40 + i), [0.0] * 8) for i in range(3)]
+    corpus = spark.createDataFrame(
+        rows, f"vec_id {id_type}, embedding array<double>"
+    )
+    queries = spark.createDataFrame(
+        rows[:3], f"query_id {id_type}, query_vec array<double>"
+    )
+    gemm = similarity.cosine_topk_gemm(corpus, queries, k=5, exact_rerank=True)
+    types = dict(gemm.dtypes)
+    assert (types["query_id"], types["neighbor_id"]) == (id_type, id_type)
+    exact = similarity.cosine_topk(corpus, queries, k=5)
+    assert sorted(map(tuple, gemm.collect())) == sorted(
+        map(tuple, exact.collect())
+    )
+
+
 def test_dedup_pipeline_lsh_is_recall_subset(spark, sf_dir):
     """The scale-path pipeline (sign-LSH embedding signal) at a PRUNED
     probe config (probe_hamming=0 — the production recall/candidate

@@ -261,45 +261,6 @@ def test_unimax_allocation_water_filling_invariants(spark):
             assert r["epochs_bp"] == 10000 * allocs[k] // counts[k]
 
 
-def test_kmeans_fixedpoint_partitioning_invariant_and_sane(spark):
-    """The fixed-point Lloyd fit is EXACTLY partitioning-invariant
-    (integer sums are associative — the property float Lloyd lacks)
-    and recovers planted blobs."""
-    import random
-
-    from real_time_data_pipeline_spark.operators.similarity import (
-        kmeans_fixedpoint,
-    )
-
-    rng = random.Random(7)
-    centers = [[1.0 if d == c else 0.0 for d in range(8)] for c in range(3)]
-    rows = []
-    for i in range(120):
-        c = i % 3
-        rows.append(
-            (i, [v + rng.uniform(-0.05, 0.05) for v in centers[c]])
-        )
-    df1 = spark.createDataFrame(
-        rows, "vec_id bigint, embedding array<double>"
-    ).repartition(1)
-    df8 = spark.createDataFrame(
-        rows, "vec_id bigint, embedding array<double>"
-    ).repartition(8)
-    out1 = sorted(
-        map(tuple, kmeans_fixedpoint(df1, k=3, iters=3).collect())
-    )
-    out8 = sorted(
-        map(tuple, kmeans_fixedpoint(df8, k=3, iters=3).collect())
-    )
-    assert out1 == out8  # exact, not approximate, equality
-    # blob recovery: each planted blob lands in one cell
-    by_blob: dict = {}
-    for vec_id, cell, _ in out1:
-        by_blob.setdefault(vec_id % 3, set()).add(cell)
-    assert all(len(cells) == 1 for cells in by_blob.values())
-    assert len({c for s in by_blob.values() for c in s}) == 3
-
-
 def test_pca_power_top1_invariant_and_matches_numpy(spark):
     """The fixed-point power iteration is EXACTLY partitioning-invariant
     and its projection direction agrees with numpy's exact top
