@@ -108,7 +108,7 @@ def cosine_topk_gemm(
     final ranking carries about k·|queries| rows per partition regardless
     of corpus size.
 
-    Numerically: numpy pairwise summation ≠ the sequential fold of
+    Numerically: numpy's summation order ≠ the sequential fold of
     :func:`cosine_topk`, so raw GEMM scores can differ in the last ulp —
     ranks are identical except for exact ties at the boundary.  With
     ``exact_rerank=True`` the GEMM pass only SELECTS candidates (top
