@@ -12,9 +12,12 @@ the same float64 bytes either way — operators switching from
 ``mapInPandas`` to ``mapInArrow`` with these helpers compute
 bit-identical results (pinned by tests/test_r11_opt.py).
 
-Used by the PQ/IVF-PQ fit/encode/score passes and the sign-LSH bucket
-pass; per-task CPU, invisible at sf0.1 (2 000 vectors), the point at
-100 TB — evidence from the 30× probe lives in OPTIMIZATION_r11.md.
+Every vector pass in operators/similarity.py parses through these
+helpers (GEMM top-k, IVF assign, k-means and its inertia, PCA fit and
+transform, PQ fit/encode/ADC scoring, IVF-PQ residuals), as does the
+sign-LSH bucket pass in operators/dedup.py; per-task CPU, invisible at
+sf0.1 (2 000 vectors), the point at 100 TB — evidence from the 30×
+probe lives in OPTIMIZATION_r11.md.
 """
 
 from __future__ import annotations

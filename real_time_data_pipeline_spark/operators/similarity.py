@@ -374,7 +374,7 @@ def ivf_topk(
     one pass, no shuffle of vector payloads; a k-means refinement would
     drop in here without changing the plan shape).  Every corpus vector
     is assigned to its nearest centroid by cosine in one Arrow-batched
-    ``mapInPandas`` pass (numpy argmax against the 16×dim centroid
+    ``mapInArrow`` pass (numpy argmax against the 16×dim centroid
     matrix); at 100 TB the (id → cell) assignment is the partition key
     you'd persist the corpus under, so a probe reads nprobe/n_cells of
     the data.  Each query probes its `nprobe` nearest cells; candidates
@@ -406,7 +406,7 @@ def _ivf_centroid_matrix(corpus, n_cells, seed, id_col, vec_col):
         .limit(n_cells)
         .collect()
     )
-    Cm = np.array([np.asarray(r[1], dtype=np.float64) for r in cent_rows])
+    Cm = np.asarray([r[1] for r in cent_rows], dtype=np.float64)
     return Cm / np.linalg.norm(Cm, axis=1, keepdims=True)
 
 
@@ -589,7 +589,7 @@ def ivf_index_append(
 
     spark = new_vectors.sparkSession
     cent = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    Cm = np.array([np.asarray(r.centroid, dtype=np.float64) for r in cent])
+    Cm = np.asarray([r.centroid for r in cent], dtype=np.float64)
     if batch_id is None:
         # partition-column max: resolved from directory metadata, no
         # data scan
@@ -625,7 +625,7 @@ def ivf_index_topk(
     import numpy as np
 
     cent = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    Cm = np.array([np.asarray(r.centroid, dtype=np.float64) for r in cent])
+    Cm = np.asarray([r.centroid for r in cent], dtype=np.float64)
 
     probe_q = _probe_cells(queries, Cm, nprobe, query_id_col, query_vec_col)
     cells = sorted({c for _, c in probe_q})
@@ -694,25 +694,25 @@ def kmeans_inertia(assigned: DataFrame, Cm, vec_col: str = "embedding"):
     """Mean cosine distance (1 - cos) of each vector to its assigned
     centroid — the spherical-k-means objective, computed in one
     Arrow-batched pass + a scalar aggregate."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    C = Cm
+    from real_time_data_pipeline_spark.operators.arrowvec import list_matrix
 
-    def dist(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
+    def dist(batches):
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            V = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            V = list_matrix(rb.column(0))
             Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            cos = np.einsum("ij,ij->i", Vn, C[pdf["cell"].to_numpy()])
-            yield pd.DataFrame({"d": 1.0 - cos})
+            cos = np.einsum("ij,ij->i", Vn, Cm[rb.column(1).to_numpy()])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(1.0 - cos, type=pa.float64())], ["d"]
+            )
 
     return (
         assigned.select(vec_col, "cell")
-        .mapInPandas(dist, "d double")
+        .mapInArrow(dist, "d double")
         .agg(F.avg("d").alias("inertia"))
         .collect()[0]["inertia"]
     )
@@ -820,7 +820,7 @@ def pca_fit(
     variance; the whitening/reduction step run before ANN indexing or
     cluster analysis of a 100 TB embedding corpus.
 
-    Scale shape: one ``mapInPandas`` pass emits per-Arrow-batch Gram
+    Scale shape: one ``mapInArrow`` pass emits per-partition Gram
     partials (count, Σx, X'X flattened) — executor state is dim² floats,
     never rows; the partials (≤ batches rows of dim²+dim+1 doubles) are
     summed by ONE tiny aggregate and the dim×dim eigendecomposition runs
@@ -833,31 +833,33 @@ def pca_fit(
     bounded partials (order-independent to the last ulp only — fine for
     the rows-only tier this feeds).
     """
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from real_time_data_pipeline_spark.operators.arrowvec import (
+        list_array,
+        list_matrix,
+    )
 
     dim = len(df.select(vec_col).first()[0])
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partials(batches):
         # ONE partial per partition (accumulate across Arrow batches) —
         # the downstream reduce sees #partitions rows, not #batches.
         n_tot = 0
         s_tot = np.zeros(dim)
         g_tot = np.zeros((dim, dim))
-        for pdf in batches:
-            if not len(pdf):
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            X = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
+            X = list_matrix(rb.column(0))
             n_tot += len(X)
             s_tot += X.sum(axis=0)
             g_tot += X.T @ X
         if n_tot:
-            yield pd.DataFrame(
-                {"p": [np.concatenate(([n_tot], s_tot, g_tot.ravel())).tolist()]}
+            p = np.concatenate(([n_tot], s_tot, g_tot.ravel()))
+            yield pa.RecordBatch.from_arrays(
+                [list_array(p[None, :], pa.float64())], ["p"]
             )
 
     # Elementwise reduce via posexplode + (index)-keyed sum: 1+dim+dim²
@@ -867,7 +869,7 @@ def pca_fit(
     # seconds at dim=64; this shape is O(1) plan size at any dim.
     rows = (
         df.select(vec_col)
-        .mapInPandas(partials, "p array<double>")
+        .mapInArrow(partials, "p array<double>")
         .select(F.posexplode("p").alias("i", "v"))
         .groupBy("i")
         .agg(F.sum("v").alias("v"))
@@ -904,11 +906,12 @@ def pca_transform(
     """Project rows onto fitted components: one Arrow-batched numpy
     matmul per batch (components broadcast via task closure — (k, dim)
     floats), emitting scalar ``pc1..pck`` columns (no array outputs —
-    driver-hash friendly).  Zero shuffles."""
-    from collections.abc import Iterator
-
+    driver-hash friendly).  Zero shuffles; id columns pass through as
+    the input Arrow columns, so they keep their types."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from real_time_data_pipeline_spark.operators.arrowvec import list_matrix
 
     id_cols = id_cols or ["vec_id"]
     W = np.asarray(components, dtype=np.float64)
@@ -922,20 +925,20 @@ def pca_transform(
         + [f"{prefix}{i + 1} double" for i in range(k)]
     )
 
-    def project(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            S = (X - mu) @ W.T
-            out = {c: pdf[c] for c in id_cols}
-            for i in range(k):
-                out[f"{prefix}{i + 1}"] = S[:, i]
-            yield pd.DataFrame(out)
+    n_ids = len(id_cols)
 
-    return df.select(*id_cols, vec_col).mapInPandas(project, out_schema)
+    def project(batches):
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            S = (list_matrix(rb.column(n_ids)) - mu) @ W.T
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(i) for i in range(n_ids)]
+                + [pa.array(S[:, i], type=pa.float64()) for i in range(k)],
+                [*id_cols, *(f"{prefix}{i + 1}" for i in range(k))],
+            )
+
+    return df.select(*id_cols, vec_col).mapInArrow(project, out_schema)
 
 
 def quantize_int8(
@@ -1094,7 +1097,7 @@ def pq_fit(
             .limit(k)
             .collect()
         )
-        init = np.array([np.asarray(r[1], dtype=np.float64) for r in rows_])
+        init = np.asarray([r[1] for r in rows_], dtype=np.float64)
     dim = init.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
@@ -1240,333 +1243,146 @@ def pq_encode(
     )
 
 
+def _adc_table(B, r):
+    """(m × k_codebook) ADC table: squared L2 from each dim/m slice of
+    ``r`` to every entry of that subspace's codebook ``B[j]``."""
+    import numpy as np
+
+    m, _, dsub = B.shape
+    return np.stack(
+        [((B[j] - r[j * dsub : (j + 1) * dsub]) ** 2).sum(-1) for j in range(m)]
+    )
+
+
+def _adc_candidates(d2, k: int):
+    """Indices of the batch rows that can still reach the ``(adc_d2 asc,
+    id asc)`` top-k: every row at or below the batch's k-th smallest
+    distance.  Rows tied with the k-th all stay, so the final window's
+    id tie-break sees every contender — a positional cut would keep
+    whichever tied rows the batch happened to list first."""
+    import numpy as np
+
+    if len(d2) <= k:
+        return np.arange(len(d2))
+    kth = np.partition(d2, k - 1)[k - 1]
+    return np.flatnonzero(d2 <= kth)
+
+
+def _adc_window(scored: DataFrame, k: int) -> DataFrame:
+    """Per-probe ``(adc_d2 asc, id asc)`` top-k over the bounded
+    candidate union the scoring pass emits."""
+    w = Window.partitionBy("query_id").orderBy(F.asc("adc_d2"), F.asc("id"))
+    return (
+        scored.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= k)
+        .drop("_rk")
+    )
+
+
 def pq_topk(
     codes_df: DataFrame,
     books,
-    query_vec,
+    probes: list,
     k: int = 10,
 ) -> DataFrame:
-    """ADC top-k: build the (m × k_codebook) query-to-entry squared-
-    distance table once (driver), broadcast it via the task closure,
-    then one Arrow-batched pass scores each candidate with m table
-    lookups and emits ONLY its per-batch top-k — the global TakeOrdered
-    sees a bounded candidate union, never the corpus.  Output
-    (id, adc_d2) ascending, deterministic tie-break on id.
+    """ADC top-k for every probe in ONE Arrow pass over the codes.
+
+    ``probes`` is ``[(query_id, query_vec), ...]``; ``query_id`` carries
+    the type of ``codes_df.id`` (probes are corpus rows).  Per probe the
+    (m × k_codebook) query-to-entry squared-distance table is built once
+    on the driver and shipped in the task closure; each Arrow batch is
+    scored with m table lookups per row and emits only its candidates
+    per probe (:func:`_adc_candidates`), so the per-probe window sees a
+    bounded candidate union, never the corpus.
+
+    Output: (query_id, id, adc_d2) — per probe the k smallest rows in
+    (adc_d2 asc, id asc) order.
     """
     import numpy as np
-    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
     from real_time_data_pipeline_spark.operators.arrowvec import list_matrix
 
+    if not probes:
+        # Fail on the driver with a real message; an empty probe list
+        # would otherwise surface as an opaque executor-side error.
+        raise ValueError("pq_topk: probes must be non-empty")
     B = np.asarray(books, dtype=np.float64)
-    m, kk, dsub = B.shape
-    qv = np.asarray(query_vec, dtype=np.float64)
-    qv = qv / np.linalg.norm(qv)
-    tab = np.empty((m, kk))
-    for j in range(m):
-        S = qv[j * dsub : (j + 1) * dsub]
-        tab[j] = ((B[j] - S[None, :]) ** 2).sum(-1)
+    m = B.shape[0]
+    tabs = []
+    for _, query_vec in probes:
+        qv = np.asarray(query_vec, dtype=np.float64)
+        tabs.append(_adc_table(B, qv / np.linalg.norm(qv)))
+    qids = [qid for qid, _ in probes]
+    id_type = codes_df.schema["id"].dataType
+    # mapInArrow does not cast: query ids get the id column's Arrow type
+    # explicitly, ids are taken from the input column itself.
+    id_arrow = to_arrow_type(id_type)
 
-    # r11: mapInArrow — the codes column converts via one flat-buffer
-    # reshape, the surviving ids come back via one take() (guide §4.2);
-    # same int codes, same float64 table lookups, bit-identical rows.
     def score(batches):
+        import pyarrow as pa
+
+        probe_ids = pa.array(qids, type=id_arrow)
         for rb in batches:
             if rb.num_rows == 0:
                 continue
             C = list_matrix(rb.column(0), dtype=np.int64)
-            d2 = tab[np.arange(m)[None, :], C].sum(1)
-            top = np.argsort(d2, kind="stable")[:k]
+            owner, rows, d2s = [], [], []
+            for p, tab in enumerate(tabs):
+                d2 = tab[np.arange(m)[None, :], C].sum(1)
+                keep = _adc_candidates(d2, k)
+                owner.append(np.full(len(keep), p))
+                rows.append(keep)
+                d2s.append(d2[keep])
             yield pa.RecordBatch.from_arrays(
                 [
-                    rb.column(1).take(pa.array(top)),
-                    pa.array(d2[top], type=pa.float64()),
+                    probe_ids.take(pa.array(np.concatenate(owner))),
+                    rb.column(1).take(pa.array(np.concatenate(rows))),
+                    pa.array(np.concatenate(d2s), type=pa.float64()),
                 ],
-                ["id", "adc_d2"],
+                ["query_id", "id", "adc_d2"],
             )
 
+    id_t = id_type.simpleString()
     scored = codes_df.select("codes", "id").mapInArrow(
-        score, f"id {codes_df.schema['id'].dataType.simpleString()}, adc_d2 double"
+        score, f"query_id {id_t}, id {id_t}, adc_d2 double"
     )
-    return scored.orderBy(F.asc("adc_d2"), F.asc("id")).limit(k)
+    return _adc_window(scored, k)
 
 
 def pq_topk_rerank(
     corpus: DataFrame,
     codes_df: DataFrame,
     books,
-    query_vec,
-    k: int = 10,
-    shortlist: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id=None,
-) -> DataFrame:
-    """Production PQ search: ADC over the compressed codes produces a
-    ``shortlist`` of candidates (the only corpus-wide pass — m byte
-    lookups per vector), then ONLY those rows are re-ranked with exact
-    cosine against the raw vectors.  Recall is governed by
-    shortlist/k (unit-tested: exact top-10 coverage at C=100 on the
-    test corpus); the exact pass touches C rows regardless of corpus
-    size, joined back via a broadcast of the C-row shortlist.
-
-    Output matches cosine_topk's shape — (query_id, rank, neighbor_id,
-    cos_bp) when ``query_id`` is given (the query row itself excluded
-    from candidates), (rank, neighbor_id, cos_bp) otherwise —
-    deterministic tie-break on id, so callers can substitute this for
-    cosine_topk unchanged.  The rank window runs over the k-row limit
-    output (single tiny partition), not the corpus.
-    """
-    cands = pq_topk(codes_df, books, query_vec, k=shortlist).select(
-        F.col("id").alias(id_col)
-    )
-    sub = corpus.join(F.broadcast(cands), id_col, "left_semi")
-    qn = _norm(F.array(*[F.lit(float(x)) for x in query_vec]))
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = _dot(F.col(vec_col), qcol) / (_norm(F.col(vec_col)) * qn)
-    if query_id is not None:
-        sub = sub.filter(F.col(id_col) != F.lit(query_id))
-    top = (
-        sub.select(F.col(id_col), cos.alias("cos"))
-        .orderBy(F.desc("cos"), F.asc(id_col))
-        .limit(k)
-    )
-    w = Window.orderBy(F.desc("cos"), F.asc(id_col))
-    ranked = top.select(
-        F.row_number().over(w).alias("rank"),
-        F.col(id_col).alias("neighbor_id"),
-        F.floor(F.lit(1e4) * F.col("cos")).cast("bigint").alias("cos_bp"),
-    )
-    if query_id is not None:
-        ranked = ranked.select(
-            F.lit(query_id).alias("query_id"), "rank", "neighbor_id", "cos_bp"
-        )
-    return ranked
-
-
-def pq_topk_multi(
-    codes_df: DataFrame,
-    books,
-    probes: list,
-    k: int = 10,
-) -> DataFrame:
-    """Multi-probe :func:`pq_topk`: score EVERY probe in ONE Arrow pass
-    over the codes instead of one corpus scan per probe (the pre-r10
-    per-leg loop shape — 5 probes paid 5 scans + 5 global sorts).
-
-    ``probes`` is ``[(query_id, query_vec), ...]``.  Per probe the ADC
-    table build, the m-lookup scoring, and the per-batch ``stable``
-    argsort truncation are expression-for-expression the single-probe
-    code, so each probe's candidate union — and therefore the final
-    (adc_d2 asc, id asc) top-k — is bit-identical to calling
-    :func:`pq_topk` once per probe; the global per-probe selection runs
-    as one window over the bounded candidate union instead of one
-    orderBy().limit() job per probe.
-
-    Output: (query_id bigint, id, adc_d2), k rows per probe.
-    """
-    import numpy as np
-
-    from real_time_data_pipeline_spark.operators.arrowvec import list_matrix
-
-    if not probes:
-        # Fail on the driver with a real message; an empty probe list
-        # would otherwise surface as an opaque executor-side error
-        # (ADVICE r10).
-        raise ValueError("pq_topk_multi: probes must be non-empty")
-    B = np.asarray(books, dtype=np.float64)
-    m, kk, dsub = B.shape
-    tabs = []
-    for qid, query_vec in probes:
-        qv = np.asarray(query_vec, dtype=np.float64)
-        qv = qv / np.linalg.norm(qv)
-        tab = np.empty((m, kk))
-        for j in range(m):
-            S = qv[j * dsub : (j + 1) * dsub]
-            tab[j] = ((B[j] - S[None, :]) ** 2).sum(-1)
-        tabs.append((int(qid), tab))
-
-    # r11: mapInArrow — one flat-buffer reshape of the codes column per
-    # batch, surviving ids via one take() over the concatenated per-probe
-    # top indices (guide §4.2); batch boundaries and per-probe argsorts
-    # are unchanged, so the candidate union is bit-identical.
-    def score(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            C = list_matrix(rb.column(0), dtype=np.int64)
-            qids, tops, d2s = [], [], []
-            for qid, tab in tabs:
-                d2 = tab[np.arange(m)[None, :], C].sum(1)
-                top = np.argsort(d2, kind="stable")[:k]
-                qids.append(np.full(len(top), qid, dtype=np.int64))
-                tops.append(top)
-                d2s.append(d2[top])
-            idx = pa.array(np.concatenate(tops))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(qids)),
-                    rb.column(1).take(idx),
-                    pa.array(np.concatenate(d2s), type=pa.float64()),
-                ],
-                ["query_id", "id", "adc_d2"],
-            )
-
-    id_t = codes_df.schema["id"].dataType.simpleString()
-    scored = codes_df.select("codes", "id").mapInArrow(
-        score, f"query_id bigint, id {id_t}, adc_d2 double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_d2"), F.asc("id"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
-
-
-def ivfpq_topk_multi(
-    codes_df: DataFrame,
-    coarse,
-    books,
-    probes: list,
-    k: int = 10,
-    nprobe: int = 4,
-) -> DataFrame:
-    """Multi-probe :func:`ivfpq_topk` — one Arrow pass scores every
-    probe (``[(query_id, query_vec), ...]``) instead of one cell-filtered
-    corpus scan per probe.  Per-probe cell ranking, residual ADC tables,
-    per-cell masking and the per-batch ``stable`` argsort truncation are
-    the single-probe expressions verbatim, so each probe's output rows
-    are bit-identical to its own :func:`ivfpq_topk` call PROVIDED every
-    probe scans the same row set — enforced here by requiring the probed
-    cell sets to be equal across probes (the full-probe certification
-    config, nprobe == n_cells, always satisfies it); otherwise the
-    per-batch truncation could see different batch contents than the
-    single-probe filter and the caller must fall back to per-probe calls.
-
-    Output: (query_id bigint, id, cell, adc_d2), k rows per probe.
-    """
-    import numpy as np
-
-    from real_time_data_pipeline_spark.operators.arrowvec import list_matrix
-
-    if not probes:
-        # Driver-side guard (ADVICE r10) — see pq_topk_multi.
-        raise ValueError("ivfpq_topk_multi: probes must be non-empty")
-    Cm = np.asarray(coarse, dtype=np.float64)
-    B = np.asarray(books, dtype=np.float64)
-    m, kk, dsub = B.shape
-    per_probe = []
-    for qid, query_vec in probes:
-        qv = np.asarray(query_vec, dtype=np.float64)
-        qv = qv / np.linalg.norm(qv)
-        d2cells = ((Cm - qv[None, :]) ** 2).sum(1)
-        probe_cells = np.argsort(d2cells, kind="stable")[:nprobe]
-        tabs = {}
-        for c in probe_cells:
-            r = qv - Cm[c]
-            tabs[int(c)] = np.stack(
-                [
-                    ((B[j] - r[j * dsub : (j + 1) * dsub][None, :]) ** 2).sum(-1)
-                    for j in range(m)
-                ]
-            )
-        per_probe.append((int(qid), [int(c) for c in probe_cells], tabs))
-
-    cell_sets = {frozenset(cells) for _, cells, _ in per_probe}
-    if len(cell_sets) != 1:
-        raise ValueError(
-            "ivfpq_topk_multi requires identical probed-cell sets per "
-            "probe (batch equivalence with the per-probe plan); use "
-            "ivfpq_topk per probe for divergent nprobe selections"
-        )
-    probe_list = per_probe[0][1]
-
-    # r11: mapInArrow + flat-buffer reshape (guide §4.2) — identical
-    # per-probe masking/argsort over identical batch contents, so the
-    # candidate union is bit-identical to the pandas pass.
-    def score(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            C = list_matrix(rb.column(0), dtype=np.int64)
-            cells = rb.column(1).to_numpy()
-            qids, tops, out_cells, d2s = [], [], [], []
-            for qid, plist, tabs in per_probe:
-                d2 = np.empty(len(C))
-                for c in plist:
-                    mask = cells == c
-                    if mask.any():
-                        d2[mask] = tabs[c][
-                            np.arange(m)[None, :], C[mask]
-                        ].sum(1)
-                top = np.argsort(d2, kind="stable")[:k]
-                qids.append(np.full(len(top), qid, dtype=np.int64))
-                tops.append(top)
-                out_cells.append(cells[top])
-                d2s.append(d2[top])
-            idx = pa.array(np.concatenate(tops))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(qids)),
-                    rb.column(2).take(idx),
-                    pa.array(
-                        np.concatenate(out_cells).astype(np.int32)
-                    ),
-                    pa.array(np.concatenate(d2s), type=pa.float64()),
-                ],
-                ["query_id", "id", "cell", "adc_d2"],
-            )
-
-    id_t = codes_df.schema["id"].dataType.simpleString()
-    scored = codes_df.filter(F.col("cell").isin(probe_list)).select(
-        "codes", "cell", "id"
-    ).mapInArrow(
-        score, f"query_id bigint, id {id_t}, cell int, adc_d2 double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_d2"), F.asc("id"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
-
-
-def pq_topk_rerank_multi(
-    corpus: DataFrame,
-    codes_df: DataFrame,
-    books,
     probes: list,
     k: int = 10,
     shortlist: int = 100,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Multi-probe :func:`pq_topk_rerank`: ONE ADC pass shortlists every
-    probe (via :func:`pq_topk_multi`), then ONE candidate-bounded exact
-    re-rank scores all shortlists together.  The re-rank cosine is the
-    same sequential double fold over the same (vector, query) values —
-    the query vector arrives via a broadcast (query_id, vec) join rather
-    than per-leg literals, which changes nothing about the fold — and
-    the per-query (cos desc, id asc) row_number selection is exactly the
-    per-leg orderBy().limit(k) row set, so output rows are bit-identical
-    to unioning one :func:`pq_topk_rerank` call per probe.
+    """Production PQ search: ONE ADC pass (:func:`pq_topk`) produces a
+    ``shortlist`` of candidates per probe (the only corpus-wide pass — m
+    byte lookups per vector), then ONLY those rows are re-ranked with
+    exact cosine against the raw vectors.  Recall is governed by
+    shortlist/k (unit-tested against cosine_topk); the exact pass
+    touches |probes|·C rows regardless of corpus size.
 
-    Output matches the per-leg union shape: (query_id, rank,
-    neighbor_id, cos_bp); the probe row itself is excluded per leg.
+    The re-rank cosine is cosine_topk's sequential double fold with its
+    (cos desc, id asc) tie-break; the probe vector arrives via a
+    broadcast (query_id, vec) join.  Output matches cosine_topk's shape,
+    (query_id, rank, neighbor_id, cos_bp) with query_id typed like the
+    corpus id; each probe's own row is excluded from its candidates, so
+    callers can substitute this for cosine_topk unchanged.
     """
     spark = corpus.sparkSession
-    cands = pq_topk_multi(codes_df, books, probes, k=shortlist).select(
+    cands = pq_topk(codes_df, books, probes, k=shortlist).select(
         "query_id", F.col("id").alias(id_col)
     )
+    id_t = codes_df.schema["id"].dataType.simpleString()
     qdf = F.broadcast(
         spark.createDataFrame(
-            [(int(qid), [float(x) for x in vec]) for qid, vec in probes],
-            "query_id bigint, _qv array<double>",
+            [(qid, [float(x) for x in vec]) for qid, vec in probes],
+            f"query_id {id_t}, _qv array<double>",
         )
     )
     # The candidate set is len(probes)·shortlist rows — broadcast-hint it
@@ -1682,73 +1498,102 @@ def ivfpq_topk(
     codes_df: DataFrame,
     coarse,
     books,
-    query_vec,
+    probes: list,
     k: int = 10,
     nprobe: int = 4,
 ) -> DataFrame:
-    """IVF-PQ query: rank coarse cells by distance to the query, keep
-    ``nprobe``; build ONE ADC table per probed cell (against the
-    query's residual to THAT cell — nprobe·m·k floats, task closure);
-    score only rows in probed cells (the filter prunes partitions when
-    ``codes_df`` is persisted partitioned-by-cell, same as ivf_index)
-    with m lookups each, emitting per-batch top-k.  Output
-    (id, cell, adc_d2) ascending, tie-break on id.
+    """IVF-PQ query for every probe (``[(query_id, query_vec), ...]``)
+    in ONE Arrow pass: per probe, rank the coarse cells by distance to
+    the query and keep ``nprobe``; build one ADC table per probed cell
+    (against the query's residual to THAT cell — nprobe·m·k floats per
+    probe, task closure); score only rows in probed cells (the filter
+    prunes partitions when ``codes_df`` is persisted partitioned-by-cell,
+    same as ivf_index) with m lookups each, emitting per-batch
+    candidates (:func:`_adc_candidates`).
+
+    Every probe must select the same cell set, so one cell-filtered
+    scan serves all of them and no row outside a probe's cells is ever
+    scored; the full-probe certification config (nprobe == n_cells)
+    always satisfies it.
+
+    Output: (query_id, id, cell, adc_d2) — per probe the k smallest rows
+    in (adc_d2 asc, id asc) order; query_id carries the type of
+    ``codes_df.id``.
     """
     import numpy as np
-    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
     from real_time_data_pipeline_spark.operators.arrowvec import list_matrix
 
+    if not probes:
+        # Driver-side guard — see pq_topk.
+        raise ValueError("ivfpq_topk: probes must be non-empty")
     Cm = np.asarray(coarse, dtype=np.float64)
     B = np.asarray(books, dtype=np.float64)
-    m, kk, dsub = B.shape
-    qv = np.asarray(query_vec, dtype=np.float64)
-    qv = qv / np.linalg.norm(qv)
-    d2cells = ((Cm - qv[None, :]) ** 2).sum(1)
-    probe = np.argsort(d2cells, kind="stable")[:nprobe]
-    tabs = {}
-    for c in probe:
-        r = qv - Cm[c]
-        tabs[int(c)] = np.stack(
-            [
-                ((B[j] - r[j * dsub : (j + 1) * dsub][None, :]) ** 2).sum(-1)
-                for j in range(m)
-            ]
+    m = B.shape[0]
+    per_probe = []
+    for _, query_vec in probes:
+        qv = np.asarray(query_vec, dtype=np.float64)
+        qv = qv / np.linalg.norm(qv)
+        d2cells = ((Cm - qv[None, :]) ** 2).sum(1)
+        probe_cells = [
+            int(c) for c in np.argsort(d2cells, kind="stable")[:nprobe]
+        ]
+        per_probe.append(
+            (probe_cells, {c: _adc_table(B, qv - Cm[c]) for c in probe_cells})
         )
 
-    probe_list = [int(c) for c in probe]
+    if len({frozenset(cells) for cells, _ in per_probe}) != 1:
+        raise ValueError(
+            "ivfpq_topk requires every probe to select the same cell set "
+            "(one cell-filtered scan serves all probes); call it once per "
+            "probe when their nprobe nearest cells differ"
+        )
+    probe_list = per_probe[0][0]
+    qids = [qid for qid, _ in probes]
+    id_type = codes_df.schema["id"].dataType
+    id_arrow = to_arrow_type(id_type)
 
-    # r11: mapInArrow + flat-buffer reshape (guide §4.2) — identical
-    # masking/argsort over identical batch contents, bit-identical rows.
     def score(batches):
+        import pyarrow as pa
+
+        probe_ids = pa.array(qids, type=id_arrow)
         for rb in batches:
             if rb.num_rows == 0:
                 continue
             C = list_matrix(rb.column(0), dtype=np.int64)
             cells = rb.column(1).to_numpy()
-            d2 = np.empty(len(C))
-            for c in probe_list:
-                mask = cells == c
-                if mask.any():
-                    d2[mask] = tabs[c][
-                        np.arange(m)[None, :], C[mask]
-                    ].sum(1)
-            top = np.argsort(d2, kind="stable")[:k]
-            idx = pa.array(top)
+            owner, rows, d2s = [], [], []
+            for p, (plist, tabs) in enumerate(per_probe):
+                d2 = np.empty(len(C))
+                for c in plist:
+                    mask = cells == c
+                    if mask.any():
+                        d2[mask] = tabs[c][
+                            np.arange(m)[None, :], C[mask]
+                        ].sum(1)
+                keep = _adc_candidates(d2, k)
+                owner.append(np.full(len(keep), p))
+                rows.append(keep)
+                d2s.append(d2[keep])
+            idx = np.concatenate(rows)
             yield pa.RecordBatch.from_arrays(
                 [
-                    rb.column(2).take(idx),
-                    pa.array(cells[top].astype(np.int32)),
-                    pa.array(d2[top], type=pa.float64()),
+                    probe_ids.take(pa.array(np.concatenate(owner))),
+                    rb.column(2).take(pa.array(idx)),
+                    pa.array(cells[idx].astype(np.int32)),
+                    pa.array(np.concatenate(d2s), type=pa.float64()),
                 ],
-                ["id", "cell", "adc_d2"],
+                ["query_id", "id", "cell", "adc_d2"],
             )
 
-    id_t = codes_df.schema["id"].dataType.simpleString()
+    id_t = id_type.simpleString()
     scored = codes_df.filter(F.col("cell").isin(probe_list)).select(
         "codes", "cell", "id"
-    ).mapInArrow(score, f"id {id_t}, cell int, adc_d2 double")
-    return scored.orderBy(F.asc("adc_d2"), F.asc("id")).limit(k)
+    ).mapInArrow(
+        score, f"query_id {id_t}, id {id_t}, cell int, adc_d2 double"
+    )
+    return _adc_window(scored, k)
 
 
 def semdedup_cells(

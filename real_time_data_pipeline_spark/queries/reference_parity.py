@@ -163,8 +163,8 @@ def q_enrich_join(spark, sf_dir):
     in for the accounts table and SCALES with SF, so the enriched dim
     carries no hint — autoBroadcastJoinThreshold/AQE picks broadcast at
     small SF and a shuffled join at 100 TB.  (The banking-schema
-    accounts/customers dims in operators/joins.py stay hinted: those
-    are bounded by business design.)"""
+    accounts dim in operators/joins.py stays hinted: it is bounded by
+    business design.)"""
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")

@@ -11,8 +11,10 @@ from __future__ import annotations
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from real_time_data_pipeline_spark.operators import curation
+from real_time_data_pipeline_spark.schemas import load_table
 
 
 def _docs(spark, rows):
@@ -1144,3 +1146,48 @@ def test_leakage_safe_split_never_straddles_near_dup_pairs(spark, sf_dir):
     assert {r["split"] for r in split.select("split").distinct().collect()} == {
         "train", "val", "test"
     }
+
+
+def _sorted_rows(df, cols):
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def _tokens_frame(docs):
+    from real_time_data_pipeline_spark.operators.dedup import tokens_col
+
+    return docs.select(
+        F.col("doc_id"),
+        F.length(F.col("text")).alias("n_chars"),
+        tokens_col("text").alias("toks"),
+    )
+
+
+def test_quality_verdicts_shared_tokens_identical(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents")
+    bench = docs.filter(docs.source == "src0")
+    base = curation.quality_verdicts(docs, bench)
+    shared = curation.quality_verdicts(
+        docs, bench, tokens_frame=_tokens_frame(docs)
+    )
+    cols = base.columns
+    assert _sorted_rows(base, cols) == _sorted_rows(shared, cols)
+
+
+def test_near_dup_text_signals_shared_tokens_identical(spark, sf_dir):
+    from real_time_data_pipeline_spark.operators.dedup import (
+        near_dup_text_signals,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    base = near_dup_text_signals(docs, jaccard_threshold=0.8)
+    shared = near_dup_text_signals(
+        docs, jaccard_threshold=0.8, tokens_frame=_tokens_frame(docs)
+    )
+    for key, cols in (
+        ("exact_flags", ["doc_id", "is_exact_dup"]),
+        ("exact_edges", ["id_a", "id_b"]),
+        ("mh_pairs", ["id_a", "id_b"]),
+    ):
+        assert _sorted_rows(base[key], cols) == _sorted_rows(
+            shared[key], cols
+        ), key

@@ -894,90 +894,6 @@ def test_int8_quantization_error_bound_and_roundtrip(spark):
     assert prof[0]["n_vals"] == 200
 
 
-def test_pq_rerank_matches_exact_topk(spark, sf_dir):
-    """PQ = candidate generator + exact re-rank: with the unit-tested
-    shortlist coverage (C=100 on the 500-vector corpus), the re-ranked
-    top-10 must EQUAL the exact brute-force top-10 wherever the
-    shortlist covers it — here it covers all 10."""
-    from pyspark.sql import functions as F
-
-    from real_time_data_pipeline_spark.operators import similarity
-    from real_time_data_pipeline_spark.schemas import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    books = similarity.pq_fit(emb, m=16, k=64, iters=3)
-    codes = similarity.pq_encode(emb, books)
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    got = [
-        r["neighbor_id"]
-        for r in similarity.pq_topk_rerank(
-            emb, codes, books, qvec, k=10, shortlist=100, query_id=0
-        ).collect()
-    ]
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    exact = [
-        r["neighbor_id"]
-        for r in similarity.cosine_topk(emb, q, k=10).collect()
-    ]
-    overlap = len(set(got) & set(exact))
-    assert overlap >= 9, (got, exact)
-    # determinism: a refit yields identical codebooks -> identical result
-    books2 = similarity.pq_fit(emb, m=16, k=64, iters=3)
-    import numpy as np
-
-    assert np.array_equal(np.asarray(books), np.asarray(books2))
-
-
-def test_pq_adc_self_match_ranks_first(spark, sf_dir):
-    """Raw ADC (no re-rank): the query's own code must score lowest —
-    the quantization-consistency sanity check."""
-    from pyspark.sql import functions as F
-
-    from real_time_data_pipeline_spark.operators import similarity
-    from real_time_data_pipeline_spark.schemas import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    books = similarity.pq_fit(emb, m=16, k=64, iters=2)
-    codes = similarity.pq_encode(emb, books)
-    qvec = emb.filter(F.col("vec_id") == 7).select("embedding").first()[0]
-    top = similarity.pq_topk(codes, books, qvec, k=3).collect()
-    assert top[0]["id"] == 7
-
-
-def test_ivfpq_self_match_and_probe_pruning(spark, sf_dir):
-    """IVF-PQ: the query's own residual code scores minimal when its
-    cell is probed; probing fewer cells only removes candidates (never
-    reorders survivors); full probe contains the self-match first."""
-    from pyspark.sql import functions as F
-
-    from real_time_data_pipeline_spark.operators import similarity
-    from real_time_data_pipeline_spark.schemas import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    Cm, books, codes = similarity.ivfpq_build(
-        emb, n_cells=8, m=8, k=16, iters=2
-    )
-    qvec = emb.filter(F.col("vec_id") == 3).select("embedding").first()[0]
-    full = similarity.ivfpq_topk(codes, Cm, books, qvec, k=10, nprobe=8)
-    rows_full = full.collect()
-    assert rows_full[0]["id"] == 3  # self-match first under full probe
-    pruned = similarity.ivfpq_topk(codes, Cm, books, qvec, k=10, nprobe=2)
-    ids_pruned = [r["id"] for r in pruned.collect()]
-    ids_full = [r["id"] for r in rows_full]
-    # pruning is candidate REMOVAL: pruned results appear in the full
-    # list in the same relative order
-    pos = [ids_full.index(i) for i in ids_pruned if i in ids_full]
-    assert pos == sorted(pos)
-    # build determinism
-    Cm2, books2, _ = similarity.ivfpq_build(emb, n_cells=8, m=8, k=16, iters=2)
-    import numpy as np
-
-    assert np.array_equal(np.asarray(books), np.asarray(books2))
-    assert np.array_equal(np.asarray(Cm), np.asarray(Cm2))
-
-
 def test_topk_paths_exclude_zero_norm_vectors(spark):
     """A zero-norm embedding has no defined cosine (0/0 -> NaN, which
     ANSI mode turns into a crash at the bp cast); every top-k path must
